@@ -365,16 +365,17 @@ object RelationalQueries {
   }
 
   /** The TUNED SERVING twin of qb7: the same stack body probing the
-    * caller's persisted index through [[Similarity.ivfAdcTopKIndexedHier]]
-    * at recall-gated absolute dials ([[Similarity.tuneNprobe]] /
-    * [[Similarity.tuneGprobe]] at monitoring cadence, never per query).
+    * caller's persisted index through
+    * [[Similarity.ivfAdcTopKIndexedShardedTuned]] at recall-gated
+    * absolute dials ([[Similarity.tuneShardDials]] at monitoring
+    * cadence, never per query).
     * OPT-IN serving path — a measured-recall operator (its agreement
     * with the fraction-law stack is itself a gated GrowthBench number),
     * never substituted under the oracle-gated qb7 row. */
   private[graft] def qb7Tuned(s: SparkSession, d: String,
-      vtable: String, nprobe: Int, gprobe: Int): DataFrame =
-    qb7Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexedHier(q,
-      "vec_id", "embedding", k, nprobe, gprobe, vtable, dim = 64))
+      vtable: String, dials: Seq[Similarity.ShardDials]): DataFrame =
+    qb7Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexedShardedTuned(q,
+      "vec_id", "embedding", k, vtable, dials))
 
   /** qc2's production stack with the DENSE LEG pluggable — same
     * single-body contract as [[qb7Stack]]. */
@@ -419,38 +420,21 @@ object RelationalQueries {
   /** The TUNED SERVING twin of qc2 — [[qb7Tuned]]'s contract on the
     * full screened stack. */
   private[graft] def qc2Tuned(s: SparkSession, d: String,
-      vtable: String, nprobe: Int, gprobe: Int): DataFrame =
-    qc2Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexedHier(q,
-      "vec_id", "embedding", k, nprobe, gprobe, vtable, dim = 64))
+      vtable: String, dials: Seq[Similarity.ShardDials]): DataFrame =
+    qc2Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexedShardedTuned(q,
+      "vec_id", "embedding", k, vtable, dials))
 
-  /** Dense leg driven by the PERSISTED serving decision (r18 verdict
-    * item 3): reads [[Similarity.readServingDecision]] — refusing a
-    * stale or missing one LOUDLY — and serves through the mode it
-    * prescribes (flat tuned probe, two-level probe when a gprobe was
-    * stored, or the escalated exact-dot re-rank), with NO exact leg
-    * and no hand-passed dials at serving time. The decision read is
-    * one sidecar row + a metadata state-key check per stack plan. */
+  /** Dense leg driven by the PERSISTED per-shard serving rows (r18
+    * verdict item 3): [[Similarity.ivfAdcTopKIndexedShardedServed]]
+    * serves each shard through the mode its stored row prescribes (the
+    * tuned two-level probe, or the escalated exact-dot re-rank) and
+    * refuses stale or missing rows LOUDLY — NO exact leg and no
+    * hand-passed dials at serving time. */
   private[graft] def storedDenseLeg(s: SparkSession, d: String,
-      vtable: String): (DataFrame, Int) => DataFrame = {
-    val (serving, gp) = Similarity.readServingDecision(s, vtable)
-      .getOrElse(throw new IllegalStateException(
-        s"$vtable has no fresh serving decision — the index was " +
-          "retrained/rebuilt since the last tune (or never tuned): " +
-          "run tuneServingPersist at monitoring cadence, then serve"))
-    serving match {
-      case Similarity.RerankServing(np, depth, _) => (q, k) =>
-        Similarity.ivfAdcRerankIndexed(Tables.embeddings(s, d), q,
-            "vec_id", "embedding", k, math.max(depth, k), np, vtable,
-            dim = 64)
-          .select(col("q_id"), col("nb_id"), col("rank"))
-      case Similarity.ProbeServing(np, _) if gp > 0 => (q, k) =>
-        Similarity.ivfAdcTopKIndexedHier(q, "vec_id", "embedding", k,
-          np, gp, vtable, dim = 64)
-      case Similarity.ProbeServing(np, _) => (q, k) =>
-        Similarity.ivfAdcTopKIndexed(q, "vec_id", "embedding", k, np,
-          vtable, dim = 64)
-    }
-  }
+      vtable: String): (DataFrame, Int) => DataFrame = (q, k) =>
+    Similarity.ivfAdcTopKIndexedShardedServed(Tables.embeddings(s, d), q,
+        "vec_id", "embedding", k, vtable)
+      .select(col("q_id"), col("nb_id"), col("rank"))
 
   /** [[qb7Tuned]] serving from the STORED decision instead of
     * hand-passed dials. */

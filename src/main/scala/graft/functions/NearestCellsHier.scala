@@ -42,7 +42,7 @@ import org.apache.spark.sql.types._
   * form; the SERVING path is [[NearestCellsHierBcExpr]], whose
   * grouping rides a broadcast and is computed exactly once per
   * (table, epoch) regardless of execution mode
-  * ([[graft.pipeline.Similarity.ivfAdcTopKIndexedHier]] uses it). */
+  * ([[NearestCellsSharded]]'s two-level kernel runs it per shard). */
 case class NearestCellsHierExpr(first: Expression, second: Expression,
     third: Expression, fourth: Expression) extends QuaternaryExpression {
 

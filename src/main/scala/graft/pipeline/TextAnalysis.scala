@@ -458,7 +458,7 @@ object TextAnalysis {
     * PACKED. Package-visible so PlanQualitySpec can assert the
     * scan-level claims (index-only file scans, pushed `In(term)`,
     * broadcast candidate restriction) on the live plan (the
-    * adcProbeCandidates convention). */
+    * svFlatCandidates convention). */
   private[graft] def phrasePostIndexed(qp: DataFrame, table: String,
       candidates: DataFrame, candIdCol: String, n: Int,
       maxPushdownTerms: Int = 256): DataFrame = {
@@ -539,10 +539,13 @@ object TextAnalysis {
   /** The probe-visible state of a persisted BM25 index: postings of
     * COMMITTED generations minus committed tombstones, plus the exact
     * integer corpus scalars `(n_docs, sum_dl)` summed over committed
-    * deltas. Everything stays LAZY — the committed-generation
-    * restriction is a broadcast semi-join against the (tiny) scalar
-    * table rather than a driver collect, so a probe adds no blocking
-    * job; orphan files cost only their own read, never correctness. */
+    * deltas. The commit set is read ONCE, driver-side, when the frame
+    * is constructed ([[graft.sources.SidecarRead]] over the healed,
+    * freshly listed `_s` sidecar — no Spark job) and frozen into the
+    * plan: the generation restriction is a pushed `In(gen)` scan
+    * predicate, and the stats are a local relation of the same read. A
+    * commit landing after construction is not seen by this frame;
+    * orphan files cost only their own read, never correctness. */
   private[graft] def committedIndex(spark: SparkSession, table: String,
       bucketedRead: Boolean = false): (DataFrame, DataFrame) = {
     // heal a compactor crash's DROP/RENAME window first — with in-loop

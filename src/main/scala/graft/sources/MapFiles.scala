@@ -23,7 +23,11 @@ import org.apache.spark.sql.functions._
 object MapFiles {
 
   /** Persist the MapFile layout: `buckets` hash buckets, each sorted by
-    * `keyCol` (MapFileOutputFormat.getRecordWriter's sorted writer). */
+    * `keyCol` (MapFileOutputFormat.getRecordWriter's sorted writer).
+    * Always parquet, whatever `spark.sql.sources.default` says: the
+    * layout's bloom filters and row-group pruning are parquet's, and
+    * [[SidecarRead]] decodes the protocol sidecars written here as
+    * parquet. */
   def write(df: DataFrame, keyCol: String, buckets: Int,
       table: String): Unit = {
     require(!table.contains("."),
@@ -32,7 +36,7 @@ object MapFiles {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     clearStaleLocation(spark, table)
-    df.write.mode("overwrite")
+    df.write.format("parquet").mode("overwrite")
       .option("parquet.bloom.filter.enabled#" + keyCol, "true")
       .bucketBy(buckets, keyCol).sortBy(keyCol)
       .saveAsTable(table)

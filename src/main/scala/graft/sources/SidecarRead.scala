@@ -26,28 +26,42 @@ import org.apache.spark.sql.SparkSession
   * centroid tables (array column), or anything corpus-sized. */
 object SidecarRead {
 
-  /** One decoded sidecar row: field name → JVM value (Long, Int,
-    * Double, String, Boolean); absent/null fields are absent from the
-    * map. `fields` is the file-schema field-name set (presence checks —
-    * the schema-evolution probes `contains("rsgen")` etc. need it even
-    * when the column is null on every row). */
-  final case class Row(values: Map[String, Any], fields: Set[String]) {
-    def getLong(f: String): Long = values(f) match {
+  /** One decoded sidecar row of `table`: field name → JVM value (Long,
+    * Int, Double, String, Boolean); absent/null fields are absent from
+    * the map. `fields` is the file-schema field-name set (presence
+    * checks — the schema-evolution probes `contains("rsgen")` etc. need
+    * it even when the column is null on every row). The typed getters
+    * fail naming the table and the field, never a bare `key not
+    * found`. */
+  final case class Row(values: Map[String, Any], fields: Set[String],
+      table: String) {
+    private def value(f: String): Any = values.getOrElse(f,
+      throw new IllegalStateException(
+        if (fields.contains(f)) s"$table: sidecar field '$f' is null"
+        else s"$table: sidecar has no field '$f' (fields: " +
+          fields.toSeq.sorted.mkString(", ") + ")"))
+    private def badType(f: String, x: Any): Nothing =
+      throw new IllegalStateException(
+        s"$table: sidecar field '$f' holds ${x.getClass.getSimpleName} $x")
+    def getLong(f: String): Long = value(f) match {
       case l: Long => l
       case i: Int  => i.toLong
-      case x       => throw new IllegalStateException(s"$f: $x")
+      case x       => badType(f, x)
     }
-    def getInt(f: String): Int = values(f) match {
+    def getInt(f: String): Int = value(f) match {
       case i: Int  => i
       case l: Long => l.toInt
-      case x       => throw new IllegalStateException(s"$f: $x")
+      case x       => badType(f, x)
     }
-    def getDouble(f: String): Double = values(f) match {
+    def getDouble(f: String): Double = value(f) match {
       case d: Double => d
       case f2: Float => f2.toDouble
-      case x         => throw new IllegalStateException(s"$f: $x")
+      case x         => badType(f, x)
     }
-    def getString(f: String): String = values(f).asInstanceOf[String]
+    def getString(f: String): String = value(f) match {
+      case s: String => s
+      case x         => badType(f, x)
+    }
   }
 
   /** All rows of `table`, crash-healed and freshly listed (the
@@ -58,9 +72,10 @@ object SidecarRead {
     * (max/find) or sort, exactly like the collect form's callers. */
   def rows(spark: SparkSession, table: String): Seq[Row] =
     graft.pipeline.MergeTables.freshInputFiles(spark, table)
-      .flatMap(readFile(spark, _))
+      .flatMap(readFile(spark, table, _))
 
-  private def readFile(spark: SparkSession, file: String): Seq[Row] = {
+  private def readFile(spark: SparkSession, table: String, file: String)
+      : Seq[Row] = {
     val conf = spark.sessionState.newHadoopConf()
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
@@ -91,7 +106,7 @@ object SidecarRead {
             }
           }
         }.toMap
-        out += Row(vals, names)
+        out += Row(vals, names, table)
         g = reader.read()
       }
       out.toSeq

@@ -757,7 +757,7 @@ object GrowthBench {
     // candidates per query are linear in the corpus — on hash-random
     // vectors no inverted file does better. REAL embeddings are
     // clustered with low intrinsic dimension; there the production dial
-    // is tuneNprobe's recall-gated ABSOLUTE nprobe and per-query probe
+    // is tuneShardDials' recall-gated ABSOLUTE nprobe and per-query probe
     // work is nprobe x occupancy = constant. This tier measures that
     // claim across the same two decades: clustered corpora at 1x and
     // 100x, the dial tuned by the recall gate at EACH scale, the FIXED
@@ -812,20 +812,18 @@ object GrowthBench {
           s"gtuned_idx_$tag", nlist = nl, dim = 64, cents = cents)
         // tune on a BOUNDED sample (~200 queries at any scale) — the
         // monitoring-cadence shape; a corpus-proportional panel turns
-        // each audit's candidate set corpus-sized. The reference is
-        // the QUANTIZER CEILING (adcFullTopK): nprobe dials probing
-        // loss; quantization loss is re-rank/retrain territory, and on
-        // a dense synthetic whose neighbor margins sit at the int8
-        // noise floor a float-exact target would escalate the probe
-        // for loss it cannot fix (Similarity.tuneNprobe doc)
+        // each audit's candidate set corpus-sized. Both dials gate
+        // against the QUANTIZER CEILING: they dial probing loss;
+        // quantization loss is re-rank/retrain territory, and on a
+        // dense synthetic whose neighbor margins sit at the int8 noise
+        // floor a float-exact target would escalate the probe for loss
+        // it cannot fix (Similarity.tuneShardDials doc)
         val tunePanel = emb.filter(
           col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
         val t0 = System.nanoTime()
-        val ref = Similarity.adcFullTopK(tunePanel, "vec_id",
-          "embedding", k = 3, s"gtuned_idx_$tag")
-        val (np, rec) = Similarity.tuneNprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, s"gtuned_idx_$tag", targetRecall = target,
-          reference = ref)
+        val dials = Similarity.tuneShardDials(tunePanel, "vec_id",
+          "embedding", k = 3, s"gtuned_idx_$tag", targetRecall = target)
+        val Similarity.ShardDials(np, rec, gp, gRec) = dials.head
         System.err.println(f"[growth] qadc_tuned_dial_$tag%-14s " +
           f"nprobe=$np of nlist=$nl (fraction law: $fracNp) " +
           f"probe-recall=$rec%.3f tune=${(System.nanoTime() - t0) / 1e9}%.1f s")
@@ -837,26 +835,16 @@ object GrowthBench {
         t(s"qadc_tuned_probe_$tag") = time(s"qadc_tuned_probe_$tag",
           Similarity.ivfAdcTopKIndexed(panel1x, "vec_id", "embedding",
             k = 3, nprobe = np, table = s"gtuned_idx_$tag", dim = 64))
-        // the TWO-LEVEL dial at the same gate: gprobe tuned against
-        // the flat probe at the tuned np (the measured quantity is
-        // exactly the sqrt-level's loss), then the FIXED panel timed
-        // through the hier path
-        val flatRef = Similarity.ivfAdcTopKIndexed(tunePanel, "vec_id",
-            "embedding", k = 3, nprobe = np,
-            table = s"gtuned_idx_$tag", dim = 64)
-          .select("q_id", "nb_id")
-        val (gp, gRec) = Similarity.tuneGprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, nprobe = np, s"gtuned_idx_$tag",
-          targetRecall = target, reference = flatRef)
+        // the TWO-LEVEL dial at the same gate (tuned with np above),
+        // then the FIXED panel timed through the hier path
         System.err.println(f"[growth] qadc_hier_dial_$tag%-15s " +
           f"gprobe=$gp of ~${math.ceil(math.sqrt(nl.toDouble)).toInt} " +
-          f"groups, recall-vs-flat=$gRec%.3f")
+          f"groups, recall-vs-ceiling=$gRec%.3f")
         t(s"qadc_hier_gp_$tag") = gp.toDouble
         t(s"qadc_hier_recall_$tag") = gRec
         t(s"qadc_hier_probe_$tag") = time(s"qadc_hier_probe_$tag",
-          Similarity.ivfAdcTopKIndexedHier(panel1x, "vec_id",
-            "embedding", k = 3, nprobe = np, gprobe = gp,
-            table = s"gtuned_idx_$tag", dim = 64))
+          Similarity.ivfAdcTopKIndexedShardedTuned(panel1x, "vec_id",
+            "embedding", k = 3, s"gtuned_idx_$tag", dials))
       }
 
       // ---- TUNED SERVING STACKS (r17 verdict item 1) ----
@@ -906,17 +894,9 @@ object GrowthBench {
           s"gstk_idx_$tag", nlist = nl, dim = 64, cents = cents)
         val tunePanel = emb.filter(
           col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
-        val ceil0 = Similarity.adcFullTopK(tunePanel, "vec_id",
-          "embedding", k = 3, s"gstk_idx_$tag")
-        val (np, rec) = Similarity.tuneNprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, s"gstk_idx_$tag", targetRecall = 0.8,
-          reference = ceil0)
-        val flatRef = Similarity.ivfAdcTopKIndexed(tunePanel, "vec_id",
-            "embedding", k = 3, nprobe = np, table = s"gstk_idx_$tag",
-            dim = 64).select("q_id", "nb_id")
-        val (gp, gRec) = Similarity.tuneGprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, nprobe = np, s"gstk_idx_$tag",
-          targetRecall = 0.8, reference = flatRef)
+        val dials = Similarity.tuneShardDials(tunePanel, "vec_id",
+          "embedding", k = 3, s"gstk_idx_$tag", targetRecall = 0.8)
+        val Similarity.ShardDials(np, rec, gp, gRec) = dials.head
         System.err.println(f"[growth] stack dials $tag%-5s np=$np " +
           f"gp=$gp probe-recall=$rec%.3f hier-recall=$gRec%.3f " +
           f"(fraction law np=$fracNp)")
@@ -930,29 +910,29 @@ object GrowthBench {
         t(s"qb7_stack_frac_$tag") = time(s"qb7_stack_frac_$tag",
           graft.RelationalQueries.qb7Stack(spark, d, frac))
         graft.RelationalQueries.qb7Tuned(spark, d, s"gstk_idx_$tag",
-          np, gp).count()
+          dials).count()
         t(s"qb7_stack_tuned_$tag") = time(s"qb7_stack_tuned_$tag",
           graft.RelationalQueries.qb7Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp))
+            dials))
         graft.RelationalQueries.qc2Stack(spark, d, frac).count()
         t(s"qc2_stack_frac_$tag") = time(s"qc2_stack_frac_$tag",
           graft.RelationalQueries.qc2Stack(spark, d, frac))
         graft.RelationalQueries.qc2Tuned(spark, d, s"gstk_idx_$tag",
-          np, gp).count()
+          dials).count()
         t(s"qc2_stack_tuned_$tag") = time(s"qc2_stack_tuned_$tag",
           graft.RelationalQueries.qc2Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp))
+            dials))
         def agree(a: DataFrame, b: DataFrame): Double =
           Similarity.retrievalAgreement(a, b, "q_id", "doc_id")
             .agg((sum("n_both") / sum("n_b")).cast("double"))
             .head().getDouble(0)
         t(s"qb7_stack_agree_$tag") = agree(
           graft.RelationalQueries.qb7Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp),
+            dials),
           graft.RelationalQueries.qb7Stack(spark, d, frac))
         t(s"qc2_stack_agree_$tag") = agree(
           graft.RelationalQueries.qc2Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp),
+            dials),
           graft.RelationalQueries.qc2Stack(spark, d, frac))
       }
 
@@ -974,8 +954,8 @@ object GrowthBench {
       // over the SAME sharded index. The tune line also records r19
       // item 3: tuneShardDials runs its shards CONCURRENTLY on a
       // bounded pool (was 26 s sequential at 1x/s8). s1/s32 at 100x
-      // are deliberately skipped: nShards=1 is a spec-pinned identity
-      // with the single-table tuned probe, and the 100x tier's cost
+      // are deliberately skipped: nShards=1 is the one-shard index the
+      // stack tier above already measures, and the 100x tier's cost
       // budget is the s8 serving point, not a shard-count sweep.
       locally {
         val probePanel = Tables.embeddings(spark, genStack(1))

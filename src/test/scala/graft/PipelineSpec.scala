@@ -295,6 +295,14 @@ class DedupSpec extends AnyFunSuite with SparkTest {
 }
 
 class SimilaritySpec extends AnyFunSuite with SparkTest {
+  /** The active quantizer epoch of a one-shard index. */
+  private def epochOf(t: String): Long =
+    Similarity.svState(spark, t, fresh = true).epochs.head
+
+  /** The probe-visible stored rows of a persisted dense index. */
+  private def liveRowsOf(t: String): org.apache.spark.sql.DataFrame =
+    Similarity.svLiveRows(spark, Similarity.svState(spark, t, fresh = true))
+
   import spark.implicits._
 
   private val vecs = Seq(
@@ -899,7 +907,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         "adc_app_idx", dim = 64)
       Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
         "adc_full_idx", nlist = nlist, dim = 64, cents = cents)
-      def rows(t: String) = spark.table(t)
+      def rows(t: String) = spark.table(t + "_sv")
         .select(col("cell"), col("id"), hex(col("qc")), col("scale"))
         .as[(Int, Long, String, Double)].collect().sorted.toSeq
       assert(rows("adc_app_idx").nonEmpty &&
@@ -915,11 +923,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         Similarity.appendIvfAdcIndex(batch, "vec_id", "embedding",
           "adc_missing_idx", dim = 64)
       }
-    } finally {
-      for (t <- Seq("adc_app_idx", "adc_app_idx_c", "adc_app_idx_g",
-          "adc_full_idx", "adc_full_idx_c", "adc_full_idx_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally dropAdc("adc_app_idx", "adc_full_idx")
   }
 
   test("appendIvfAdcIndex atomicity: a writer killed before the commit leaves probes on the exact pre-append state") {
@@ -943,9 +947,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         "embedding", "adc_atom_idx", nlist = nlist, dim = 64)
       val pre = probe()
       val orphanGen = 777L
-      Similarity.appendAdcRowsOnly(batch, "vec_id", "embedding",
-        "adc_atom_idx", orphanGen)
-      assert(spark.table("adc_atom_idx")
+      Similarity.svAppendRowsOnly(batch, "vec_id", "embedding",
+        Similarity.svState(spark, "adc_atom_idx", fresh = true), orphanGen)
+      assert(spark.table("adc_atom_idx_sv")
         .filter(col("gen") === orphanGen).count() > 0)
       assert(probe() == pre, "uncommitted append leaked into the probe")
       // retry: the full append under a fresh generation
@@ -960,16 +964,11 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         .as[(Long, Long, Int)].collect().sorted.toSeq
       assert(probe() == ref, "retried append diverged from rebuild")
       Similarity.compactIvfAdcIndex(spark, "adc_atom_idx")
-      assert(spark.table("adc_atom_idx")
+      assert(spark.table("adc_atom_idx_sv")
         .filter(col("gen") === orphanGen).count() == 0,
         "compaction should reclaim the orphan generation")
       assert(probe() == ref)
-    } finally {
-      for (t <- Seq("adc_atom_idx", "adc_atom_idx_c", "adc_atom_idx_g",
-          "adc_atom_idx_t", "adc_atom_idx_cmp",
-          "adc_atom_ref", "adc_atom_ref_c", "adc_atom_ref_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally dropAdc("adc_atom_idx", "adc_atom_ref")
   }
 
   test("deleteIvfVecs + compactIvfAdcIndex: tombstoned probe == compacted probe == frozen-quantizer index over survivors") {
@@ -1003,22 +1002,17 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         Seq(0L, 5L, 999999L).toDF("vec_id"), "vec_id")
       assert(probe("adc_del_idx") == ref)
       Similarity.compactIvfAdcIndex(spark, "adc_del_idx")
-      assert(!spark.catalog.tableExists("adc_del_idx_t"))
-      assert(spark.table("adc_del_idx")
+      assert(!spark.catalog.tableExists("adc_del_idx_sv_t"))
+      assert(spark.table("adc_del_idx_sv")
         .filter(col("id") % 5 === 0).count() == 0,
         "compaction left dead rows")
       // compacted rows are EXACTLY the one-shot survivor index's
-      def rows(t: String) = spark.table(t)
+      def rows(t: String) = spark.table(t + "_sv")
         .select(col("cell"), col("id"), hex(col("qc")), col("scale"))
         .as[(Int, Long, String, Double)].collect().sorted.toSeq
       assert(rows("adc_del_idx") == rows("adc_del_ref"))
       assert(probe("adc_del_idx") == ref)
-    } finally {
-      for (t <- Seq("adc_del_idx", "adc_del_idx_c", "adc_del_idx_t",
-          "adc_del_idx_g", "adc_del_idx_cmp",
-          "adc_del_ref", "adc_del_ref_c", "adc_del_ref_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally dropAdc("adc_del_idx", "adc_del_ref")
   }
 
   test("retrainIvfAdcIndex: retrain == one-shot build over the live corpus, consuming tombstones and resetting generations") {
@@ -1026,8 +1020,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // build+append+delete index retrains into EXACTLY the live state a
     // fresh writeIvfAdcIndex over the survivors would produce — codes,
     // centroids, generation set, and probe — the tombstone table is
-    // consumed by the epoch flip, and the next compaction physically
-    // reclaims the retired epoch's rows down to the fresh build's
+    // consumed by the epoch flip (retired by epoch, dropped by the next
+    // compaction), and the next compaction physically reclaims the
+    // retired epoch's rows down to the fresh build's
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val n = corpus.count()
     val build = corpus.filter(col("vec_id") * 2 < n)
@@ -1042,11 +1037,11 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .as[(Long, Long, Int)].collect().sorted.toSeq
     // the PROBE-VISIBLE rows: what retrain must land exactly (the
     // retired epoch's dead rows stay physical until compaction)
-    def liveRows(t: String) = Similarity.liveAdcRows(spark, t)
+    def liveRows(t: String) = liveRowsOf(t)
       .select(col("cell"), col("id"), hex(col("qc")), col("scale"),
         col("gen"))
       .as[(Int, Long, String, Double, Long)].collect().sorted.toSeq
-    def rawRows(t: String) = spark.table(t)
+    def rawRows(t: String) = spark.table(t + "_sv")
       .select(col("cell"), col("id"), hex(col("qc")), col("scale"),
         col("gen"))
       .as[(Int, Long, String, Double, Long)].collect().sorted.toSeq
@@ -1064,15 +1059,16 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       assert(liveRows("adc_rt_idx").nonEmpty &&
         liveRows("adc_rt_idx") == liveRows("adc_rt_ref"))
       def cents(t: String) = {
-        val e = Similarity.activeAdcEpoch(spark, t)
-        spark.table(t + "_c").filter(col("epoch") === e).orderBy("cell")
+        val e = epochOf(t)
+        spark.table(t + "_sv_c").filter(col("epoch") === e).orderBy("cell")
           .select("cell", "cent")
           .as[(Int, Seq[Double])].collect().toSeq
       }
       assert(cents("adc_rt_idx") == cents("adc_rt_ref"))
-      assert(!spark.catalog.tableExists("adc_rt_idx_t"),
-        "retrain should consume the tombstone table")
-      assert(spark.table("adc_rt_idx_g").select("gen").as[Long]
+      assert(spark.table("adc_rt_idx_sv_t")
+          .filter(col("epoch") === epochOf("adc_rt_idx")).count() == 0,
+        "retrain should consume the tombstones (retire them by epoch)")
+      assert(spark.table("adc_rt_idx_sv_g").select("gen").as[Long]
         .collect().toSeq == Seq(0L),
         "retrain should reset the generation set")
       val ref = probe("adc_rt_ref")
@@ -1082,12 +1078,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       Similarity.compactIvfAdcIndex(spark, "adc_rt_idx")
       assert(rawRows("adc_rt_idx") == rawRows("adc_rt_ref"),
         "compaction did not reclaim the retired epoch's rows")
+      assert(!spark.catalog.tableExists("adc_rt_idx_sv_t"),
+        "compaction should drop the retired tombstones")
       assert(probe("adc_rt_idx") == ref)
-    } finally {
-      for (t <- Seq("adc_rt_idx", "adc_rt_ref");
-          sfx <- Seq("", "_c", "_g", "_t", "_cmp", "_g_compact_shadow"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally dropAdc("adc_rt_idx", "adc_rt_ref")
   }
 
   test("retrain atomicity: a writer killed between any two lands leaves probes bit-identical pre-state; the flip window heals to post-state") {
@@ -1116,25 +1110,25 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       assert(pre.nonEmpty)
       // CRASH STATE A — killed after the centroid land: orphan epoch-1
       // centroids, nothing else. Probes stay on the old epoch.
-      Seq((0, Seq.fill(64)(9.9), 1L), (1, Seq.fill(64)(-9.9), 1L))
-        .toDF("cell", "cent", "epoch")
+      Seq((0, 0, Seq.fill(64)(9.9), 1L), (0, 1, Seq.fill(64)(-9.9), 1L))
+        .toDF("shard", "cell", "cent", "epoch")
         .write.mode("append").bucketBy(1, "cell").sortBy("cell")
-        .saveAsTable("adc_cr_idx_c")
+        .saveAsTable("adc_cr_idx_sv_c")
       assert(probe() == pre, "orphan centroids leaked into the probe")
       // CRASH STATE B — killed after the row land too: orphan epoch-1
       // rows (gen 0 of a NEVER-ACTIVATED epoch). Still invisible.
-      spark.table("adc_cr_idx").limit(50)
+      spark.table("adc_cr_idx_sv").limit(50)
         .withColumn("epoch", lit(1L)).localCheckpoint()
         .write.mode("append")
-        .bucketBy(Similarity.ivfIndexBuckets, "cell").sortBy("cell")
-        .saveAsTable("adc_cr_idx")
-      spark.catalog.refreshTable("adc_cr_idx")
+        .bucketBy(Similarity.ivfIndexBuckets, "gcell").sortBy("gcell")
+        .saveAsTable("adc_cr_idx_sv")
+      spark.catalog.refreshTable("adc_cr_idx_sv")
       assert(probe() == pre, "orphan epoch rows leaked into the probe")
       // the RETRY: allocates PAST the orphan epoch (cannot adopt its
       // half-landed state) and lands the fresh-build probe state
       Similarity.retrainIvfAdcIndex(corpus, "vec_id", "embedding",
         "adc_cr_idx", nlist = 4, dim = 64)
-      assert(Similarity.activeAdcEpoch(spark, "adc_cr_idx") == 2L,
+      assert(epochOf("adc_cr_idx") == 2L,
         "retry adopted the crashed attempt's epoch")
       Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
         "adc_cr_ref", nlist = 4, dim = 64)
@@ -1145,28 +1139,23 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       assert(probe() == post, "retried retrain diverged from fresh build")
       // CRASH STATE C — killed INSIDE the commit swap (table_g dropped,
       // shadow complete): the next writer touch heals to POST-state
-      spark.sql("ALTER TABLE adc_cr_idx_g RENAME TO " +
-        "adc_cr_idx_g_compact_shadow")
+      spark.sql("ALTER TABLE adc_cr_idx_sv_g RENAME TO " +
+        "adc_cr_idx_sv_g_compact_shadow")
       Similarity.appendIvfAdcIndex(corpus.filter(col("vec_id") < 10),
         "vec_id", "embedding", "adc_cr_idx", dim = 64)
-      assert(spark.catalog.tableExists("adc_cr_idx_g"),
+      assert(spark.catalog.tableExists("adc_cr_idx_sv_g"),
         "the flip window did not heal on writer touch")
-      assert(Similarity.activeAdcEpoch(spark, "adc_cr_idx") == 2L)
+      assert(epochOf("adc_cr_idx") == 2L)
       // CRASH STATE D — a compactor killed inside the centroid-GC swap
       // (table_c dropped, its shadow complete): heals on the next read
       Similarity.compactIvfAdcIndex(spark, "adc_cr_idx")
-      spark.sql("ALTER TABLE adc_cr_idx_c RENAME TO " +
-        "adc_cr_idx_c_compact_shadow")
+      spark.sql("ALTER TABLE adc_cr_idx_sv_c RENAME TO " +
+        "adc_cr_idx_sv_c_compact_shadow")
       val cents2 = Similarity.readIvfCentroids(spark, "adc_cr_idx")
       assert(cents2.length == 4 &&
-        spark.catalog.tableExists("adc_cr_idx_c"),
+        spark.catalog.tableExists("adc_cr_idx_sv_c"),
         "the centroid-GC swap window did not heal on read")
-    } finally {
-      for (t <- Seq("adc_cr_idx", "adc_cr_ref");
-          sfx <- Seq("", "_c", "_g", "_t", "_cmp", "_g_compact_shadow",
-            "_c_compact_shadow"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally dropAdc("adc_cr_idx", "adc_cr_ref")
   }
 
   test("a fresh index build consumes leftover tombstones on all three tiers (a rebuild is never silently pre-deleted)") {
@@ -1188,9 +1177,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         vecs.filter(col("vec_id") % 3 === 0).select("vec_id"), "vec_id")
       Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
         "reb_adc", nlist = 4, dim = 64, cents = cents)
-      assert(!spark.catalog.tableExists("reb_adc_t"),
+      assert(!spark.catalog.tableExists("reb_adc_sv_t"),
         "ADC rebuild left the stale tombstone table")
-      assert(Similarity.liveAdcRows(spark, "reb_adc").count() ==
+      assert(liveRowsOf("reb_adc").count() ==
         vecs.count(), "ADC rebuild silently pre-deleted ids")
       // lexical tier
       TextAnalysis.writeBm25Index(docs, "doc_id", "text", "reb_bm")
@@ -1207,7 +1196,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       assert(!spark.catalog.tableExists("reb_mh_t"),
         "minhash rebuild left the stale tombstone table")
     } finally {
-      for (t <- Seq("reb_adc", "reb_bm", "reb_mh");
+      dropAdc("reb_adc")
+      for (t <- Seq("reb_bm", "reb_mh");
           sfx <- Seq("", "_c", "_g", "_s", "_t"))
         spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
     }
@@ -1223,7 +1213,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val build = corpus.filter(col("vec_id") * 2 < n)
     val (bNlist, bNprobe) = Similarity.ivfParams(build.count())
     val queries = corpus.filter(col("vec_id") % 100 === 1)
-    def stored() = spark.table("adc_pol_idx")
+    def stored() = spark.table("adc_pol_idx_sv")
       .select(col("cell"), col("id"), hex(col("qc")), col("gen"))
       .as[(Int, Long, String, Long)].collect().sorted.toSeq
     try {
@@ -1248,17 +1238,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         "the audit's measurement changed between policy calls")
       Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
         "adc_pol_ref", nlist = fNlist, dim = 64)
-      def liveRows(t: String) = Similarity.liveAdcRows(spark, t)
+      def liveRows(t: String) = liveRowsOf(t)
         .select(col("cell"), col("id"), hex(col("qc")), col("gen"))
         .as[(Int, Long, String, Long)].collect().sorted.toSeq
       assert(liveRows("adc_pol_idx").nonEmpty &&
         liveRows("adc_pol_idx") == liveRows("adc_pol_ref"),
         "policy retrain diverged from the fresh build")
-    } finally {
-      for (t <- Seq("adc_pol_idx", "adc_pol_ref");
-          sfx <- Seq("", "_c", "_g", "_t", "_g_compact_shadow"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally dropAdc("adc_pol_idx", "adc_pol_ref")
   }
 
   test("ADC generation protocol: two INTERLEAVED writers both land — rows first, commits in reverse order, probe sees the union") {
@@ -1284,23 +1270,20 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       val cents = Similarity.writeIvfAdcIndex(build, "vec_id",
         "embedding", "adc_ilv_idx", nlist = 4, dim = 64)
       val (genA, genB) = (7001L, 7002L)
-      // writer A rows, writer B rows, B commits, then A commits
-      val epA = Similarity.appendAdcRowsOnly(a, "vec_id", "embedding",
-        "adc_ilv_idx", genA)
-      val epB = Similarity.appendAdcRowsOnly(b, "vec_id", "embedding",
-        "adc_ilv_idx", genB)
-      Similarity.commitAdcGen(spark, "adc_ilv_idx", genB, epB)
-      Similarity.commitAdcGen(spark, "adc_ilv_idx", genA, epA)
+      // writer A rows, writer B rows, B commits, then A commits — each
+      // writer resolved the protocol state before landing its rows
+      val stA = Similarity.svState(spark, "adc_ilv_idx", fresh = true)
+      Similarity.svAppendRowsOnly(a, "vec_id", "embedding", stA, genA)
+      val stB = Similarity.svState(spark, "adc_ilv_idx", fresh = true)
+      Similarity.svAppendRowsOnly(b, "vec_id", "embedding", stB, genB)
+      Similarity.svCommitGen(spark, stB, genB)
+      Similarity.svCommitGen(spark, stA, genA)
       Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
         "adc_ilv_ref", nlist = 4, dim = 64, cents = cents)
       val ref = probe("adc_ilv_ref")
       assert(ref.nonEmpty && probe("adc_ilv_idx") == ref,
         "interleaved appends diverged from the one-shot build")
-    } finally {
-      for (t <- Seq("adc_ilv_idx", "adc_ilv_ref");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally dropAdc("adc_ilv_idx", "adc_ilv_ref")
   }
 
   test("tuneNprobe: recall-gated absolute nprobe meets the target with fewer probed cells than the fraction law on clustered vectors") {
@@ -1323,53 +1306,41 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
         "adc_tune_idx", nlist = nlist, dim = 64)
-      val (np, recall) = Similarity.tuneNprobe(vecs, queries, "vec_id",
+      // the one-shard index's nprobe dial, tuned against the quantizer
+      // ceiling (probing loss only — recall 1.0 reachable by
+      // construction)
+      val Seq(dials) = Similarity.tuneShardDials(queries, "vec_id",
         "embedding", k = 3, "adc_tune_idx", targetRecall = target)
+      val (np, recall) = (dials.nprobe, dials.probeRecall)
       assert(recall >= target, s"tuned recall $recall below $target")
       assert(np < fracNp,
         s"tuned nprobe $np not below the fraction law's $fracNp " +
           s"(nlist=$nlist) — no clustered-data win")
-      // the returned recall is the independent audit's number at np —
-      // the tuner reports measurements, not estimates
-      def auditAt(p: Int): Double = Similarity.recallAuditIndexed(
-          vecs, queries, "vec_id", "embedding", 3, p, "adc_tune_idx")
-        .agg(avg("recall")).head().getDouble(0)
-      // tolerance: the per-query recalls are bit-identical; only the
-      // MEAN's summation order differs (the tuner averages over a
-      // localCheckpointed exact leg with its own partitioning)
+      // the returned recall is an independent audit's number at np —
+      // the tuner reports measurements, not estimates. The ceiling is
+      // the flat probe at nprobe = nlist (every live row scored).
+      def flatAt(p: Int): Map[Long, Set[Long]] =
+        Similarity.ivfAdcTopKIndexed(queries, "vec_id", "embedding",
+            k = 3, nprobe = p, table = "adc_tune_idx", dim = 64)
+          .select("q_id", "nb_id").as[(Long, Long)].collect()
+          .groupBy(_._1).map { case (q, ps) => q -> ps.map(_._2).toSet }
+      val ceiling = flatAt(nlist)
+      def auditAt(p: Int): Double = {
+        val got = flatAt(p)
+        ceiling.map { case (q, nbs) =>
+          (nbs & got.getOrElse(q, Set.empty[Long])).size / 3.0
+        }.sum / ceiling.size
+      }
+      // tolerance: the per-query recalls are identical; only the MEAN's
+      // summation order differs
       assert(math.abs(auditAt(np) - recall) < 1e-9,
-        "tuneNprobe's recall disagrees with recallAuditIndexed at np")
+        "the tuned recall disagrees with an independent audit at np")
       // minimality up to the binary search's invariant: the cell count
       // one below the returned dial measured UNDER the target
       if (np > 1)
         assert(auditAt(np - 1) < target,
           s"np-1=${np - 1} already meets the target — not minimal")
-      // the quantizer-ceiling reference: adcFullTopK's window rank is
-      // bit-equal to the collect rank's pairs at nprobe = nlist (the
-      // spill-safe twin loses nothing)...
-      val full = Similarity.adcFullTopK(queries, "vec_id", "embedding",
-        k = 3, "adc_tune_idx")
-        .as[(Long, Long)].collect().toSet
-      val flat = Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-          "embedding", k = 3, nprobe = nlist, table = "adc_tune_idx",
-          dim = 64)
-        .select("q_id", "nb_id").as[(Long, Long)].collect().toSet
-      assert(full == flat,
-        "adcFullTopK diverged from the exhaustive flat probe")
-      // ...and tuning AGAINST it dials pure probing loss: recall 1.0
-      // is reachable by construction, and the tuned dial stays at or
-      // under the end-to-end one (same candidates, ceiling reference)
-      val (npRef, recRef) = Similarity.tuneNprobe(vecs, queries,
-        "vec_id", "embedding", k = 3, "adc_tune_idx",
-        targetRecall = target, reference = Similarity.adcFullTopK(
-          queries, "vec_id", "embedding", k = 3, "adc_tune_idx"))
-      assert(recRef >= target && npRef < fracNp,
-        s"ceiling-referenced tune (np=$npRef, recall=$recRef) did not " +
-          s"meet the gate under the fraction law's $fracNp")
-    } finally {
-      for (sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS adc_tune_idx$sfx")
-    }
+    } finally dropAdc("adc_tune_idx")
   }
 
   test("sharded ADC index: one shard equals the single table; append/delete/compact delegate per shard and lose nothing") {
@@ -1434,13 +1405,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       assert(spark.table("shrd3_idx_sv").filter(col("id") >= 400)
           .count() == 0L,
         "shrd3_idx_sv still physically holds deleted rows")
-    } finally {
-      for (t <- Seq("shrd1_idx_sv", "shrd3_idx_sv", "shrd_ref");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-      spark.sql("DROP TABLE IF EXISTS shrd1_idx_sh")
-      spark.sql("DROP TABLE IF EXISTS shrd3_idx_sh")
-    }
+    } finally dropAdc("shrd1_idx", "shrd3_idx", "shrd_ref")
   }
 
   test("sharded append atomicity: rows landed without the one-file commit stay invisible; the commit makes the whole batch visible; compaction reclaims orphans") {
@@ -1685,10 +1650,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // r18 verdict item 1: sharding (the horizontal 100 TB dial) and
     // the tuned/hier probe (the serving dial) were mutually exclusive
     // — the fan-out re-inherited the fraction law's linear candidates.
-    // Gates: (a) tuneShardDials at nShards=1 returns the single-table
-    // tuners' own dials (same audit discipline, same index state);
-    // (b) the tuned sharded probe at nShards=1 is BIT-EQUAL to
-    // ivfAdcTopKIndexedHier on an identical single-table index;
+    // Gates: (a) tuneShardDials at nShards=1 returns the same dials on
+    // the index the single-table name builds (same quantizer, same
+    // audit discipline); (b) the tuned two-level probe at those dials is
+    // BIT-EQUAL across the two builds;
     // (c) at N>1 shards the tuned fan-out's output agrees with the
     // oracle-shaped fraction-law fan-out on the gated clustered
     // geometry; (d) a dial/shard-count mismatch fails loudly.
@@ -1714,27 +1679,19 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       val dials = Similarity.tuneShardDials(queries, "vec_id",
         "embedding", k = 3, "shtn1_idx", targetRecall = target)
       assert(dials.length == 1)
-      // (a) the same dials the single-table tuners derive under the
-      // per-shard tuner's discipline: BOTH dials end-to-end against
-      // the quantizer ceiling (flat-probe-referenced gprobe gates
-      // would compound, tuneShardDials doc)
-      val ceiling = Similarity.adcFullTopK(queries, "vec_id",
-        "embedding", k = 3, "shtn_ref")
-      val (np, _) = Similarity.tuneNprobe(queries, queries, "vec_id",
-        "embedding", k = 3, "shtn_ref", targetRecall = target,
-        reference = ceiling)
-      val (gp, _) = Similarity.tuneGprobe(queries, queries, "vec_id",
-        "embedding", k = 3, nprobe = np, "shtn_ref",
-        targetRecall = target, reference = ceiling)
-      assert(dials.head.nprobe == np && dials.head.gprobe == gp,
-        s"per-shard dials ${dials.head} diverged from the " +
-          s"single-table tuners' (np=$np, gp=$gp)")
-      // (b) degenerate fan-out is the single-table hier probe, bit-equal
+      // (a) BOTH dials end-to-end against the quantizer ceiling
+      // (flat-probe-referenced gprobe gates would compound,
+      // tuneShardDials doc) — identical on the single-table build
+      val dialsRef = Similarity.tuneShardDials(queries, "vec_id",
+        "embedding", k = 3, "shtn_ref", targetRecall = target)
+      assert(dials == dialsRef,
+        s"per-shard dials $dials diverged from the single-table " +
+          s"build's $dialsRef")
+      // (b) the tuned two-level probe at those dials, bit-equal
       assert(rows(Similarity.ivfAdcTopKIndexedShardedTuned(queries,
           "vec_id", "embedding", k = 3, "shtn1_idx", dials)) ==
-        rows(Similarity.ivfAdcTopKIndexedHier(queries, "vec_id",
-          "embedding", k = 3, nprobe = np, gprobe = gp, "shtn_ref",
-          dim = 64)),
+        rows(Similarity.ivfAdcTopKIndexedShardedTuned(queries, "vec_id",
+          "embedding", k = 3, "shtn_ref", dials)),
         "nShards=1 tuned diverged from the single-table hier probe")
       // (c) N=4: every shard tunes against its own audit and the
       // merged tuned output tracks the fraction-law fan-out (the
@@ -1789,7 +1746,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
           "embedding", k = 3, "shtn4_idx")
       }
     } finally {
-      for (t <- Seq("shtn1_idx_sv", "shtn4_idx_sv", "shtn_ref");
+      dropAdc("shtn_ref")
+      for (t <- Seq("shtn1_idx_sv", "shtn4_idx_sv");
           sfx <- Seq("", "_c", "_g", "_t"))
         spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
       for (t <- Seq("shtn1_idx_sh", "shtn4_idx_sh", "shtn4_idx_serve",
@@ -1974,63 +1932,22 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d as float))")
       .as("embedding"))
     try {
-      val (nlist, nprobe) = Similarity.ivfParams(200)
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "swp_sv", nlist = nlist, dim = 64)
+      // an unrelated table that happens to match the grammar
+      vecs.write.saveAsTable("swp_sv")
       val ex = intercept[IllegalArgumentException] {
         Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
           "swp", nShards = 2, dim = 64)
       }
       assert(ex.getMessage.contains("swp_sv"), ex.getMessage)
-      // the single-table index survived intact and still probes
-      assert(spark.catalog.tableExists("swp_sv"))
-      assert(Similarity.ivfAdcTopKIndexed(
-        vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        k = 3, nprobe = nprobe, table = "swp_sv", dim = 64)
-        .count() > 0)
-    } finally {
-      for (t <- Seq("swp_sv", "swp_sv_c", "swp_sv_g", "swp_sv_t",
-          "swp_sh"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
-  }
-
-  test("the _serve sidecar refuses cross-tier writes: single-table over sharded rows and sharded over a single-table decision both fail loudly") {
-    // r19 verdict item 6 (audit note 4): writeServingDecision and the
-    // sharded writeShardServing share the `<table>_serve` name with
-    // different schemas — in correct use they can never collide, but a
-    // misuse should refuse at the WRITER, not fail on column selection
-    // at some later read.
-    val vecs = spark.range(200).select(col("id").as("vec_id"), expr(
-      "transform(sequence(0, 63), i -> cast(" +
-      "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d as float))")
-      .as("embedding"))
-    try {
-      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
-        "xw_sh_idx", nShards = 2, dim = 64)
-      Similarity.writeShardDials(spark, "xw_sh_idx",
-        Seq(Similarity.ShardDials(1, 0.9, 1, 0.9),
-          Similarity.ShardDials(1, 0.9, 1, 0.9)))
+      // the one-shard build through the single-table name refuses too
       intercept[IllegalArgumentException] {
-        Similarity.writeServingDecision(spark, "xw_sh_idx",
-          Similarity.ProbeServing(1, 0.9))
+        Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding", "swp",
+          nlist = 4, dim = 64)
       }
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "xw_st_idx", nlist = 4, dim = 64)
-      Similarity.writeServingDecision(spark, "xw_st_idx",
-        Similarity.ProbeServing(1, 0.9))
-      intercept[IllegalArgumentException] {
-        Similarity.writeShardServing(spark, "xw_st_idx",
-          Seq(Similarity.ShardServing("probe",
-            Similarity.ShardDials(1, 0.9, 1, 0.9), 0, 0.9)))
-      }
-    } finally {
-      for (t <- Seq("xw_sh_idx_sv", "xw_st_idx");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-      for (t <- Seq("xw_sh_idx_sh", "xw_sh_idx_serve", "xw_st_idx_serve"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+      // the colliding table survived intact
+      assert(spark.table("swp_sv").count() == 200L)
+      assert(!spark.catalog.tableExists("swp_sh"))
+    } finally dropAdc("swp")
   }
 
   /** Float-exact MIPS top-k as a (q_id, nb_id)-shaped reference — the
@@ -2054,14 +1971,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   }
 
   test("persisted serving decision: stored dials round-trip, a retrain refuses them stale, and the stacks serve from the store with no hand dials") {
-    // r18 verdict item 3: tuneServing's decision previously lived only
+    // r18 verdict item 3: the serving decision previously lived only
     // in the caller — every serving session re-paid the exact leg.
-    // Gates: (a) tuneServingPersist's decision reads back exactly;
-    // (b) qb7TunedStored == qb7Tuned at the stored dials (the stack
-    // takes NO hand dials and runs NO exact leg); (c) a retrain flips
-    // the quantizer state and the stored decision is refused stale —
-    // loudly at the stack; (d) a re-tune re-populates; (e) the rerank
-    // mode round-trips through the same store.
+    // Gates on the one-shard index the single-table name builds: (a)
+    // tuneShardServingPersist's rows read back exactly; (b)
+    // qb7TunedStored == qb7Tuned at the stored dials (the stack takes
+    // NO hand dials and runs NO exact leg); (c) a retrain flips the
+    // quantizer state and the stored rows are refused stale — loudly
+    // at the stack; (d) a re-tune re-populates; (e) the rerank mode
+    // round-trips through the same store.
     val clustered = spark.range(800).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 16), 17, i), 2000) / 1000.0d - 1.0d" +
@@ -2075,50 +1993,42 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndex(clustered, "vec_id", "embedding",
         "srvst_idx", nlist = nlist, dim = 64)
-      // (a) tune + persist, with a separately tuned two-level dial
-      val serving = Similarity.tuneServingPersist(clustered, panel,
+      // (a) tune + persist
+      val servings = Similarity.tuneShardServingPersist(clustered, panel,
         "vec_id", "embedding", k = 3, "srvst_idx", targetRecall = 0.8)
-      assert(serving.isInstanceOf[Similarity.ProbeServing],
-        s"mode-growth geometry escalated unexpectedly: $serving")
-      val (gp, _) = Similarity.tuneGprobe(clustered, panel, "vec_id",
-        "embedding", k = 3, nprobe = serving.nprobe, "srvst_idx",
-        targetRecall = 0.8,
-        reference = Similarity.adcFullTopK(panel, "vec_id",
-          "embedding", k = 3, "srvst_idx"))
-      Similarity.writeServingDecision(spark, "srvst_idx", serving, gp)
-      val read = Similarity.readServingDecision(spark, "srvst_idx")
-      assert(read.contains((serving, gp)),
-        s"stored decision $read != tuned ($serving, $gp)")
+      assert(servings.forall(_.mode == "probe"),
+        s"mode-growth geometry escalated unexpectedly: $servings")
+      val read = Similarity.readShardServing(spark, "srvst_idx")
+      assert(read.contains(servings),
+        s"stored decision $read != tuned $servings")
       // (b) the stack serves from the store — bit-identical to the
       // hand-dialed twin at the same dials
       assert(rows(graft.RelationalQueries.qb7TunedStored(spark, d,
           "srvst_idx")) ==
         rows(graft.RelationalQueries.qb7Tuned(spark, d, "srvst_idx",
-          serving.nprobe, gp)),
+          servings.map(_.dials))),
         "stored-decision stack diverged from the hand-dialed twin")
       // (c) a retrain invalidates: state key changes, read refuses,
       // the stack fails loudly instead of serving stale dials
       Similarity.retrainIvfAdcIndex(clustered, "vec_id", "embedding",
         "srvst_idx", nlist = nlist, dim = 64)
-      assert(Similarity.readServingDecision(spark, "srvst_idx").isEmpty,
+      assert(Similarity.readShardServing(spark, "srvst_idx").isEmpty,
         "stale decision served after a retrain")
       intercept[IllegalStateException] {
         graft.RelationalQueries.qb7TunedStored(spark, d, "srvst_idx")
       }
       // (d) re-tune re-populates against the new quantizer state
-      Similarity.tuneServingPersist(clustered, panel, "vec_id",
+      Similarity.tuneShardServingPersist(clustered, panel, "vec_id",
         "embedding", k = 3, "srvst_idx", targetRecall = 0.8)
-      assert(Similarity.readServingDecision(spark, "srvst_idx").isDefined,
+      assert(Similarity.readShardServing(spark, "srvst_idx").isDefined,
         "re-tune did not re-populate the store")
       // (e) the escalated mode round-trips through the same store
-      val rr = Similarity.RerankServing(2, 9, 0.9)
-      Similarity.writeServingDecision(spark, "srvst_idx", rr)
-      assert(Similarity.readServingDecision(spark, "srvst_idx")
-        .contains((rr, 0)), "rerank mode did not round-trip")
-    } finally {
-      for (sfx <- Seq("", "_c", "_g", "_t", "_serve"))
-        spark.sql(s"DROP TABLE IF EXISTS srvst_idx$sfx")
-    }
+      val rr = Similarity.ShardServing("rerank",
+        Similarity.ShardDials(2, 0.7, 0, 0.0), depth = 9, recall = 0.9)
+      Similarity.writeShardServing(spark, "srvst_idx", Seq(rr))
+      assert(Similarity.readShardServing(spark, "srvst_idx")
+        .contains(Seq(rr)), "rerank mode did not round-trip")
+    } finally dropAdc("srvst_idx")
   }
 
   test("tuneServing: probe-only on mode-growth clusters; the probe plateau escalates to a tuned re-rank in the density regime") {
@@ -2150,43 +2060,38 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndex(clustered, "vec_id", "embedding",
         "srv_cl_idx", nlist = Similarity.ivfParams(800L)._1, dim = 64)
-      Similarity.tuneServing(clustered,
-          clustered.filter(col("vec_id") % 40 === 0), "vec_id",
-          "embedding", k = 3, "srv_cl_idx", targetRecall = target) match {
-        case Similarity.ProbeServing(np, rec) =>
-          assert(rec >= target, s"probe-only recall $rec below $target")
-          assert(np >= 1 && np <= Similarity.ivfParams(800L)._1)
-        case other => fail(
-          s"clustered corpus escalated needlessly: $other")
-      }
+      // the one-shard index's serving policy (tuneShardServing at S=1)
+      val Seq(cl) = Similarity.tuneShardServing(clustered,
+        clustered.filter(col("vec_id") % 40 === 0), "vec_id",
+        "embedding", k = 3, "srv_cl_idx", targetRecall = target)
+      assert(cl.mode == "probe",
+        s"clustered corpus escalated needlessly: $cl")
+      assert(cl.recall >= target, s"probe-only recall ${cl.recall} " +
+        s"below $target")
+      assert(cl.dials.nprobe >= 1 &&
+        cl.dials.nprobe <= Similarity.ivfParams(800L)._1)
       Similarity.writeIvfAdcIndex(dense, "vec_id", "embedding",
         "srv_dn_idx", nlist = Similarity.ivfParams(400L)._1, dim = 64)
-      Similarity.tuneServing(dense,
+      val Seq(dn) = Similarity.tuneShardServing(dense,
+        dense.filter(col("vec_id") % 20 === 0), "vec_id",
+        "embedding", k = 3, "srv_dn_idx", targetRecall = target)
+      assert(dn.mode == "rerank", s"density corpus did not escalate: $dn")
+      val np = dn.dials.nprobe
+      assert(dn.recall >= target,
+        s"escalated path still below the gate: recall ${dn.recall} at " +
+          s"depth ${dn.depth} (np=$np)")
+      assert(dn.depth > 3 && dn.depth <= 32 * 3,
+        s"depth ${dn.depth} outside the tuned range")
+      // the decision is honest: the probe path alone really is
+      // deficient at the plateaued dial
+      val probeOnly = Similarity.recallAuditIndexed(dense,
           dense.filter(col("vec_id") % 20 === 0), "vec_id",
-          "embedding", k = 3, "srv_dn_idx", targetRecall = target) match {
-        case Similarity.RerankServing(np, depth, rec) =>
-          assert(rec >= target,
-            s"escalated path still below the gate: recall $rec at " +
-              s"depth $depth (np=$np)")
-          assert(depth > 3 && depth <= 32 * 3,
-            s"depth $depth outside the tuned range")
-          // the decision is honest: the probe path alone really is
-          // deficient at the plateaued dial
-          val probeOnly = Similarity.recallAuditIndexed(dense,
-              dense.filter(col("vec_id") % 20 === 0), "vec_id",
-              "embedding", 3, np, "srv_dn_idx")
-            .agg(avg("recall")).head().getDouble(0)
-          assert(probeOnly < target,
-            s"probe-only recall $probeOnly met the target — the " +
-              "escalation was unnecessary and the corpus is vacuous")
-        case other => fail(
-          s"density corpus did not escalate: $other")
-      }
-    } finally {
-      for (t <- Seq("srv_cl_idx", "srv_dn_idx");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+          "embedding", 3, np, "srv_dn_idx")
+        .agg(avg("recall")).head().getDouble(0)
+      assert(probeOnly < target,
+        s"probe-only recall $probeOnly met the target — the " +
+          "escalation was unnecessary and the corpus is vacuous")
+    } finally dropAdc("srv_cl_idx", "srv_dn_idx")
   }
 
   test("a same-name index REBUILD invalidates the memoized quantizer broadcast — probes rank against the new quantizer") {
@@ -2228,11 +2133,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         dim = 64))
       assert(ref.nonEmpty && got == ref,
         "rebuilt index probed against a stale memoized quantizer")
-    } finally {
-      for (t <- Seq("adc_rbld_idx", "adc_rbld_ref");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally dropAdc("adc_rbld_idx", "adc_rbld_ref")
   }
 
   test("quantizer state-key TTL cache: a warm cache hides a rebuild only until the next invalidation point — hook or expiry") {
@@ -2264,10 +2165,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // epoch number, but OUR memos are untouched (writeIvfAdcIndex in
     // this process clears them, which is why an in-process rebuild is
     // always detected; the cache trade only exists for foreign ones).
-    // Simulated by swapping the three tables' contents through the
+    // Simulated by swapping the layout tables' contents through the
     // catalog without the write path.
     def foreignSwapFrom(src: String): Unit =
-      for (sfx <- Seq("", "_c", "_g")) {
+      for (sfx <- Seq("_sv", "_sv_c", "_sv_g")) {
         val staged = spark.table(src + sfx).localCheckpoint()
         spark.sql(s"DROP TABLE IF EXISTS adc_ttl_idx$sfx")
         staged.write.saveAsTable("adc_ttl_idx" + sfx)
@@ -2301,9 +2202,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         "rebuild not detected after the TTL expired")
     } finally {
       spark.conf.unset("graft.adc.quantKeyTtlMs")
-      for (t <- Seq("adc_ttl_idx", "adc_ttl_b", "adc_ttl_a2");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
+      dropAdc("adc_ttl_idx", "adc_ttl_b", "adc_ttl_a2")
     }
   }
 
@@ -2311,9 +2210,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // the TTL trade (a FOREIGN rebuild waits for expiry or the hook)
     // must not leak onto in-process mutators: retrain and compaction
     // call invalidateQuantKeyCache, which clears BOTH serving caches —
-    // the state-key listing AND the probe-epoch read — so a warm
+    // the state-key listing AND the protocol-state read — so a warm
     // serving loop in the same process sees its own retrain's epoch
-    // flip on the very next plan, not at expiry. (Without the epoch
+    // flip on the very next plan, not at expiry. (Without the state
     // half of the hook, a cached pre-retrain epoch would filter the
     // stored side to retired rows and the probe would silently serve
     // nothing.)
@@ -2347,9 +2246,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         "in-process retrain hidden by the warm serving TTL cache")
     } finally {
       spark.conf.unset("graft.adc.quantKeyTtlMs")
-      for (t <- Seq("adc_rtl_idx", "adc_rtl_ref");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
+      dropAdc("adc_rtl_idx", "adc_rtl_ref")
     }
   }
 
@@ -2357,8 +2254,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // ADVICE r17: the stability guard compared only the epoch number,
     // but a rebuild restarts epochs at 0 — a mid-tune external rebuild
     // with a matching number passed the guard and the returned dial
-    // mixed recalls measured against different quantizers. The guard
-    // now compares the centroid FILE SNAPSHOT.
+    // mixed recalls measured against different quantizers. The tuners'
+    // guard (the persisted state key, checked at tune start and end)
+    // compares the centroid FILE SNAPSHOT.
     val a = spark.range(200).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d as float))")
@@ -2366,28 +2264,26 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
         "adc_stbl_idx", nlist = 8, dim = 64)
-      val s0 = Similarity.quantStateNow(spark, "adc_stbl_idx")
-      Similarity.requireQuantStable(spark, "adc_stbl_idx", s0) // no-op
+      def stateKey() = Similarity.svStateKey(spark,
+        Similarity.svState(spark, "adc_stbl_idx", fresh = true))
+      val s0 = stateKey()
+      assert(stateKey() == s0, "the guard is unstable without a mutation")
       // same-name rebuild: epoch numbers restart, files differ
       Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
         "adc_stbl_idx", nlist = 8, dim = 64)
-      val ex = intercept[IllegalArgumentException] {
-        Similarity.requireQuantStable(spark, "adc_stbl_idx", s0)
-      }
-      assert(ex.getMessage.contains("mix"),
-        s"rebuild with matching epoch number passed the guard: " +
-          ex.getMessage)
-    } finally {
-      for (sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS adc_stbl_idx$sfx")
-    }
+      assert(epochOf("adc_stbl_idx") == 0L)
+      assert(stateKey() != s0,
+        "rebuild with matching epoch number passed the guard")
+    } finally dropAdc("adc_stbl_idx")
   }
 
   test("ivfAdcTopKIndexedHier: full group coverage is bit-identical to the flat probe; the sqrt-scan dial keeps measured recall") {
     // the two-level probe replaces the flat O(nlist) coarse scan with
     // O(sqrt(nlist)) — at full gprobe it must lose NOTHING (bit-equal
     // results), and at a partial gprobe its recall is a measured dial
-    // like nprobe's. Same clustered recipe as the tuneNprobe spec.
+    // like nprobe's. Same clustered recipe as the tuneNprobe spec. The
+    // two-level probe of a one-shard index is the tuned sharded probe
+    // at that shard's dials.
     val n = 800
     val clusters = 16
     val vecs = spark.range(n).select(col("id").as("vec_id"), expr(
@@ -2403,6 +2299,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("q_id", "nb_id", "rank").as[(Long, Long, Int)]
       .collect().sorted.toSeq
+    def hierAt(nprobe: Int, gprobe: Int) =
+      Similarity.ivfAdcTopKIndexedShardedTuned(queries, "vec_id",
+        "embedding", k = 3, "adc_hier_idx",
+        Seq(Similarity.ShardDials(nprobe, 0.0, gprobe, 0.0)))
     try {
       Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
         "adc_hier_idx", nlist = nlist, dim = 64)
@@ -2410,43 +2310,31 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       val flatFull = rows(Similarity.ivfAdcTopKIndexed(queries,
         "vec_id", "embedding", k = 3, nprobe = nlist,
         table = "adc_hier_idx", dim = 64))
-      val hierFull = rows(Similarity.ivfAdcTopKIndexedHier(queries,
-        "vec_id", "embedding", k = 3, nprobe = nlist, gprobe = g,
-        table = "adc_hier_idx", dim = 64))
+      val hierFull = rows(hierAt(nlist, g))
       assert(flatFull.nonEmpty && hierFull == flatFull,
         "full-coverage two-level probe diverged from the flat probe")
       // the sqrt dial: probe 2 of ceil(sqrt(nlist)) groups — measured
       // recall against the exhaustive ADC reference stays above the
       // gate on clustered vectors (neighbors live in the query's own
       // group neighborhood)
-      val hier = pairs(Similarity.ivfAdcTopKIndexedHier(queries,
-        "vec_id", "embedding", k = 3, nprobe = 8, gprobe = 2,
-        table = "adc_hier_idx", dim = 64))
+      val hier = pairs(hierAt(8, 2))
       val ref = pairs(Similarity.ivfAdcTopKIndexed(queries, "vec_id",
         "embedding", k = 3, nprobe = nlist, table = "adc_hier_idx",
         dim = 64))
       val recall = hier.intersect(ref).size.toDouble / ref.size
       assert(recall >= 0.8,
         f"two-level recall $recall%.3f below 0.8 at gprobe=2 of $g")
-      // the group dial derives itself like nprobe does: smallest
-      // gprobe meeting the gate against the FLAT probe at the same
-      // nprobe — the measured quantity is exactly the loss the
-      // sqrt-scan level introduces, zero at full coverage by
-      // construction, so the search always terminates at or under g
-      val flatAtNp = Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-          "embedding", k = 3, nprobe = 8, table = "adc_hier_idx",
-          dim = 64)
-        .select("q_id", "nb_id")
-      val (gp, gRec) = Similarity.tuneGprobe(vecs, queries, "vec_id",
-        "embedding", k = 3, nprobe = 8, "adc_hier_idx",
-        targetRecall = 0.9, reference = flatAtNp)
-      assert(gRec >= 0.9 && gp <= g,
-        f"tuned gprobe=$gp of $g at recall $gRec%.3f did not meet the " +
-          "0.9 gate vs the flat probe")
-    } finally {
-      for (sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS adc_hier_idx$sfx")
-    }
+      // the group dial derives itself like nprobe does: the smallest
+      // gprobe meeting the gate at the tuned nprobe — at full coverage
+      // the two-level probe IS the flat probe, so the search always
+      // terminates at or under g with the flat dial's recall reachable
+      val Seq(dl) = Similarity.tuneShardDials(queries, "vec_id",
+        "embedding", k = 3, "adc_hier_idx", targetRecall = 0.9)
+      assert(dl.probeRecall >= 0.9 && dl.hierRecall >= 0.9 &&
+        dl.gprobe <= g,
+        f"tuned gprobe=${dl.gprobe} of $g at recall ${dl.hierRecall}%.3f " +
+          "did not meet the 0.9 gate")
+    } finally dropAdc("adc_hier_idx")
   }
 }
 
@@ -4180,11 +4068,11 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
         .as[(Long, Long, Int)].collect().sorted.toSeq
       val before = probe()
       assert(before.nonEmpty)
-      spark.sql("ALTER TABLE hx_adc_idx RENAME TO hx_adc_idx_cmp")
+      spark.sql("ALTER TABLE hx_adc_idx_sv RENAME TO hx_adc_idx_sv_cmp")
       assert(probe() == before, "ADC heal lost or changed the index")
     } finally {
-      for (t <- Seq("hx_adc_idx", "hx_adc_idx_cmp", "hx_adc_idx_c",
-          "hx_adc_idx_g"))
+      for (t <- Seq("hx_adc_idx_sv", "hx_adc_idx_sv_cmp", "hx_adc_idx_sv_c",
+          "hx_adc_idx_sv_g", "hx_adc_idx_sh"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }
     // minhash

@@ -436,17 +436,19 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
       Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
         "q99_plan_idx", nlist = nlist)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cands = Similarity.adcProbeCandidates(vecs, "vec_id",
-        "embedding", nprobe, "q99_plan_idx")
+      val cands = Similarity.svFlatCandidates(vecs, "vec_id",
+        "embedding", Similarity.svState(spark, "q99_plan_idx"),
+        Similarity.ivfIndexBuckets)(_ => Array(nprobe))
       cands.collect()
       val p = cands.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       assert(p.contains("Bucketed: true"), p.take(4000))
       // the probed-cell In filter must reach the stored parquet scan
       // (row-group pruning via the cell bloom filter + sorted min/max):
-      // without it every probe batch pays a corpus-sized codes scan
+      // without it every probe batch pays a corpus-sized codes scan.
+      // The one-shard layout keys cells as gcell (= cell at S = 1).
       assert(p.linesIterator.exists(l =>
-          l.contains("PushedFilters") && l.contains("In(cell")),
+          l.contains("PushedFilters") && l.contains("In(gcell")),
         "probed-cell set not pushed into the stored scan:\n" + p.take(4000))
       val exchanges = p.linesIterator
         .count(_.contains("Exchange hashpartitioning"))
@@ -460,9 +462,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
         exLines)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS q99_plan_idx")
-      spark.sql("DROP TABLE IF EXISTS q99_plan_idx_c")
-      spark.sql("DROP TABLE IF EXISTS q99_plan_idx_g")
+      dropAdc("q99_plan_idx")
     }
   }
 
@@ -470,7 +470,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     // ADVICE r17: the probe-side cell snapshot collects (bounded) query
     // rows at DataFrame-CONSTRUCTION time; a plan-construction-only
     // caller opts out via conf and must get (a) a stored scan WITHOUT
-    // the In(cell) filter (the distributed join-only shape — proving
+    // the In(gcell) filter (the distributed join-only shape — proving
     // the vector snapshot was never taken, since the In set is derived
     // only from it), and (b) the same rows when executed.
     import graft.pipeline.Similarity
@@ -483,12 +483,13 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
           "embedding", k = 3, nprobe = nprobe, table = "qpd_plan_idx")
         .select("q_id", "nb_id", "rank").collect().map(_.toString).sorted
       spark.conf.set("graft.adc.pushdown", "false")
-      val cands = Similarity.adcProbeCandidates(vecs, "vec_id",
-        "embedding", nprobe, "qpd_plan_idx")
+      val cands = Similarity.svFlatCandidates(vecs, "vec_id",
+        "embedding", Similarity.svState(spark, "qpd_plan_idx"),
+        Similarity.ivfIndexBuckets)(_ => Array(nprobe))
       cands.collect()
       val p = cands.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
-      assert(!p.contains("In(cell"),
+      assert(!p.contains("In(gcell"),
         "pushdown=false still pushed a cell In set:\n" + p.take(4000))
       val noPush = Similarity.ivfAdcTopKIndexed(vecs, "vec_id",
           "embedding", k = 3, nprobe = nprobe, table = "qpd_plan_idx")
@@ -497,16 +498,15 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
         "join-only shape diverged from the pushdown shape")
     } finally {
       spark.conf.unset("graft.adc.pushdown")
-      spark.sql("DROP TABLE IF EXISTS qpd_plan_idx")
-      spark.sql("DROP TABLE IF EXISTS qpd_plan_idx_c")
-      spark.sql("DROP TABLE IF EXISTS qpd_plan_idx_g")
+      dropAdc("qpd_plan_idx")
     }
   }
 
   test("two-level ADC probe keeps the flat path's plan shape — bucketed stored side, one probe-side exchange, vector-free") {
-    // ivfAdcTopKIndexedHier shares adcProbeCandidates' body; this pins
-    // that the pluggable cell selection did not change the join shape
-    // (the scale contract is the SHAPE, not the cell list)
+    // the two-level kernel shares svProbeCandidates' body with the
+    // flat one; this pins that the pluggable cell selection did not
+    // change the join shape (the scale contract is the SHAPE, not the
+    // cell list)
     import graft.pipeline.Similarity
     val vecs = Tables.embeddings(spark, d)
     val (nlist, nprobe) = Similarity.ivfParams(vecs.count())
@@ -515,8 +515,9 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
       Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
         "qhier_plan_idx", nlist = nlist)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cands = Similarity.adcProbeCandidatesHier(vecs, "vec_id",
-        "embedding", nprobe, gprobe = 2, "qhier_plan_idx")
+      val cands = Similarity.svShardCandidates(vecs, "vec_id",
+        "embedding", Similarity.svState(spark, "qhier_plan_idx"),
+        shard = 0, nprobe = nprobe, gprobe = 2)
       cands.collect()
       val p = cands.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
@@ -532,9 +533,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
         exLines)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS qhier_plan_idx")
-      spark.sql("DROP TABLE IF EXISTS qhier_plan_idx_c")
-      spark.sql("DROP TABLE IF EXISTS qhier_plan_idx_g")
+      dropAdc("qhier_plan_idx")
     }
   }
 
@@ -558,8 +557,10 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
   }
 
   test("ivfAdcRerankIndexed: the escalated serving path keeps qa1's scale shape — corpus vectors never enter an exchange") {
-    // tuneServing's escalation target (r18): persisted-index candidates
-    // to depth, full-precision-dot re-rank to k. Same typed-exchange
+    // the serving policy's escalation target (r18): persisted-index
+    // candidates to depth, full-precision-dot re-rank to k — served
+    // from a rerank-mode serving row of the one-shard index (the
+    // ivfAdcTopKIndexedShardedServed rerank branch). Same typed-exchange
     // contract as qa1's: shuffles carry no float array (int8 codes and
     // scalars only at corpus scale); any float array in a broadcast is
     // the survivor-derived query vector `qv` at candidate scale, never
@@ -571,15 +572,16 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
         "qri_plan_idx", nlist = nlist)
-      val df = Similarity.ivfAdcRerankIndexed(vecs,
+      Similarity.writeShardServing(spark, "qri_plan_idx",
+        Seq(Similarity.ShardServing("rerank",
+          Similarity.ShardDials(nprobe, 0.0, 0, 0.0), depth = 10,
+          recall = 0.0)))
+      val df = Similarity.ivfAdcTopKIndexedShardedServed(vecs,
         vecs.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-        k = 3, depth = 10, nprobe = nprobe, "qri_plan_idx")
+        k = 3, "qri_plan_idx")
       df.collect()
       assertVectorFreeExchanges(df, allowedBroadcast = Set("qv"))
-    } finally {
-      for (sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS qri_plan_idx$sfx")
-    }
+    } finally dropAdc("qri_plan_idx")
   }
 
   test("qa3: the whitening apply is a pure map-side projection — zero exchanges") {

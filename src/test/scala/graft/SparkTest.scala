@@ -44,4 +44,13 @@ object SparkTest {
 trait SparkTest {
   lazy val spark: SparkSession = SparkTest.spark
   def tmpDir(tag: String): String = SparkTest.tmpDir(tag)
+
+  /** Drop every table of the persisted dense indexes `ts` (one layout
+    * at any shard count: data, centroids, generations, replay marks,
+    * tombstones, crash shadows, routing and serving sidecars). */
+  def dropAdc(ts: String*): Unit =
+    for (t <- ts; sfx <- Seq("_sh", "_serve", "_sv", "_sv_c", "_sv_g",
+        "_sv_g_hwm", "_sv_t", "_sv_cmp", "_sv_g_compact_shadow",
+        "_sv_c_compact_shadow", "_serve_compact_shadow"))
+      spark.sql(s"DROP TABLE IF EXISTS `$t$sfx`")
 }

@@ -295,11 +295,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val rows = vecs.select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq
     try body(vecs, rows)
-    finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_c")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_g")
-    }
+    finally dropAdc(table)
   }
 
   test("streamBm25TopK: a two-micro-batch query stream equals the one-shot indexed batch retrieval") {
@@ -392,9 +388,11 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val ms = MemoryStream[(Long, Array[Float])](spark)
       ms.addData(rows)
-      val q = Similarity.adcProbeCandidates(
+      val q = Similarity.svFlatCandidates(
           ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          nprobe = 2, table = "qa6_plan_idx")
+          Similarity.svState(spark, "qa6_plan_idx"),
+          Similarity.ivfIndexBuckets)(_ => Array(2))
+        .select("q_id", "nb_id", "idot", "scale")
         .writeStream.format("memory").queryName("qa6_plan_test")
         .outputMode(OutputMode.Append()).start()
       try {
@@ -480,9 +478,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       assert(streamed == batch,
         s"stream-only=${streamed -- batch} batch-only=${batch -- streamed}")
     } finally {
-      for (t <- Seq("qc4_eq_lidx", "qc4_eq_lidx_s", "qc4_eq_vidx",
-          "qc4_eq_vidx_c", "qc4_eq_vidx_g"))
+      for (t <- Seq("qc4_eq_lidx", "qc4_eq_lidx_s"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
+      dropAdc("qc4_eq_vidx")
     }
   }
 
@@ -947,14 +945,14 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         "adc_str_one", dim = 64)
       Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
         "adc_str_ref", nlist = 4, dim = 64, cents = cents)
-      def rows(t: String) = spark.table(t)
+      def rows(t: String) = spark.table(t + "_sv")
         .select(col("cell"), col("id"), hex(col("qc")), col("scale"))
         .as[(Int, Long, String, Double)].collect().sorted.toSeq
       assert(rows("adc_str_idx").nonEmpty &&
         rows("adc_str_idx") == rows("adc_str_one") &&
         rows("adc_str_idx") == rows("adc_str_ref"))
       // the stream committed one generation PER micro-batch
-      assert(spark.table("adc_str_idx_g").count() >= 3,
+      assert(spark.table("adc_str_idx_sv_g").count() >= 3,
         "expected build + >=2 streamed generations")
       def probe(t: String) = Similarity.ivfAdcTopKIndexed(
           corpus.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
@@ -963,11 +961,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         .as[(Long, Long, Int)].collect().sorted.toSeq
       val streamed = probe("adc_str_idx")
       assert(streamed.nonEmpty && streamed == probe("adc_str_ref"))
-    } finally {
-      for (t <- Seq("adc_str_idx", "adc_str_one", "adc_str_ref");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally dropAdc("adc_str_idx", "adc_str_one", "adc_str_ref")
   }
 
   test("streamAppendMinhashIndex: two streamed micro-batch appends equal the one-shot append, and a replayed batch changes no screen result") {
@@ -1083,11 +1077,11 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndex(vecs.filter(col("vec_id") < 100),
         "vec_id", "embedding", "adc_rp_idx", nlist = 4, dim = 64)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_rp_idx")
       def astate() = (
-        spark.table("adc_rp_idx").count(),
-        spark.table("adc_rp_idx_g").count(),
+        spark.table("adc_rp_idx_sv").count(),
+        spark.table("adc_rp_idx_sv_g").count(),
         Similarity.ivfAdcTopKIndexed(
             vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
             k = 3, nprobe = 2, table = "adc_rp_idx", dim = 64)
@@ -1095,14 +1089,11 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
           .as[(Long, Long, Int)].collect().sorted.toSeq)
       val afterFirst = astate()
       assert(afterFirst._3.nonEmpty)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_rp_idx")
       assert(astate() == afterFirst,
         "a replayed committed micro-batch changed the ADC index")
-    } finally {
-      for (t <- Seq("adc_rp_idx", "adc_rp_idx_c", "adc_rp_idx_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally dropAdc("adc_rp_idx")
   }
 
   test("index tiers: a MID-LINEAGE compaction carries replay marks — re-delivered committed batches are no-ops on BM25 and ADC") {
@@ -1168,15 +1159,16 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndex(vecs.filter(col("vec_id") < 100),
         "vec_id", "embedding", "adc_oc_idx", nlist = 4, dim = 64)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_oc_idx", lineage = 2L)
-      assert(Similarity.maybeCompactIvfAdcIndex(spark, "adc_oc_idx",
-        maxGen = 1))
-      assert(MergeTables.replayed(spark, "adc_oc_idx_g",
+      assert(Similarity.maybeCompactIvfAdcIndexSharded(spark,
+        "adc_oc_idx", maxGen = 1))
+      assert(MergeTables.replayed(spark, "adc_oc_idx_sv_g",
         MergeTables.streamKey(2L, 0L)), "ADC high-water mark lost")
       def astate() = (
-        Similarity.liveAdcRows(spark, "adc_oc_idx").count(),
-        spark.table("adc_oc_idx_g").count(),
+        Similarity.svLiveRows(spark,
+          Similarity.svState(spark, "adc_oc_idx", fresh = true)).count(),
+        spark.table("adc_oc_idx_sv_g").count(),
         Similarity.ivfAdcTopKIndexed(
             vecs.filter(col("vec_id") % 50 === 0), "vec_id",
             "embedding", k = 3, nprobe = 2, table = "adc_oc_idx",
@@ -1185,12 +1177,12 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
           .as[(Long, Long, Int)].collect().sorted.toSeq)
       val afterCompact = astate()
       assert(afterCompact._3.nonEmpty)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_oc_idx", lineage = 2L)
       assert(astate() == afterCompact,
         "a compacted-away committed batch re-appended on ADC")
-      MergeTables.forgetLineages("adc_oc_idx_g")
-      assert(MergeTables.allocLineage(spark, "adc_oc_idx_g") >= 3L)
+      MergeTables.forgetLineages("adc_oc_idx_sv_g")
+      assert(MergeTables.allocLineage(spark, "adc_oc_idx_sv_g") >= 3L)
       // RETRAIN has the same exposure (its generation reset clears
       // keys) and the same fix: the retrained rows include every
       // committed streamed batch, so the replay must stay a no-op
@@ -1199,15 +1191,11 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       val afterRetrain = astate()
       assert(afterRetrain._1 == 200L,
         "retrain did not pack the full live corpus")
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_oc_idx", lineage = 2L)
       assert(astate() == afterRetrain,
         "a committed batch re-appended after a retrain cleared its key")
-    } finally {
-      for (t <- Seq("adc_oc_idx", "adc_oc_idx_c", "adc_oc_idx_g",
-          "adc_oc_idx_g_hwm"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally dropAdc("adc_oc_idx")
   }
 
   test("withBoundedStateShuffle: partitions derive from the state bound, scoped and restored, no-op at or below") {
